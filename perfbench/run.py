@@ -51,6 +51,8 @@ def main() -> int:
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
+    # a terminated run unwinds through the cleanup below (Spark stop, temp dir)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
 
     sys.path[:0] = [HERE, ROOT]
     try:

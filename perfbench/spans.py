@@ -183,8 +183,8 @@ def wait_gone(pids: list[int], timeout: float) -> list[int]:
         time.sleep(0.1)
 
 
-def host_cpu() -> tuple[int, int]:
-    """(steal, total) jiffies from the first line of /proc/stat."""
+def host_cpu() -> tuple[int, int, int]:
+    """(steal, idle + iowait, total) jiffies from the first line of /proc/stat."""
     with open("/proc/stat") as f:
         vals = [int(x) for x in f.readline().split()[1:]]
-    return vals[7], sum(vals[:8])
+    return vals[7], vals[3] + vals[4], sum(vals[:8])

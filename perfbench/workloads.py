@@ -25,14 +25,16 @@ from oracle import Bm25Oracle, check_topk
 # serve: a corpus whose materialized index is read from Parquet
 SERVE_TURNS = 20_000
 SINGLES_PER_ROUND = 8
-BATCHES_PER_ROUND = 2
+# batched run_queries calls, run and checked once in set-up
+BATCHES = 2
 BATCH_SIZE = 8
-# untimed rounds before the window: after one, the first half of the window
-# still ran ~10 % slower than the second (JIT warm-up)
-SERVE_WARMUP_ROUNDS = 2
+# untimed rounds before the window (JIT warm-up): after two, the CPU per
+# query still fell by a third over the next six rounds
+SERVE_WARMUP_ROUNDS = 4
+# rounds generated for the window: enough for 100 ms single queries
+SERVE_MIN_ROUND_S = 0.8
 # prune: a spiky corpus held in Spark storage memory
 PRUNE_TURNS = 20_000
-PRUNE_BATCHES = 2
 SPIKE_FRAC = 0.05
 DELTA_TURNS = 400
 MARKER_FRAC = 0.25
@@ -57,6 +59,8 @@ class Run:
         self.tmp, self.seed = tmp, seed
         self.seconds, self.trace = seconds, trace
         self.samples: dict[str, list[float]] = defaultdict(list)
+        # per timed round: kind -> CPU-seconds of each operation that passed
+        self.round_cpu: list[dict[str, list[float]]] = []
         self.attempted = self.failed = 0
         self.correct = True
         self.timed = False
@@ -88,8 +92,10 @@ class Run:
         self.layer["session.start_s"] = self.session_s
 
     def op(self, kind: str, fn, check):
-        """Run one operation: time ``fn``, then check its result outside the
-        timing. Outside the timed window a failure marks the run incorrect."""
+        """Run one operation: time ``fn`` and the CPU the process tree spends
+        on it, then check its result outside both. Outside the timed window
+        a failure marks the run incorrect."""
+        c0 = tr.tree_cpu_s() if self.timed else 0.0
         t0 = time.perf_counter()
         try:
             out = fn()
@@ -98,6 +104,7 @@ class Run:
             out, ok, dt = None, None, 0.0
         else:
             dt = time.perf_counter() - t0
+            cpu = tr.tree_cpu_s() - c0 if self.timed else 0.0
             ok = bool(check(out))
         if not self.timed:
             if not ok:
@@ -106,6 +113,7 @@ class Run:
         self.attempted += 1
         if ok:
             self.samples[kind].append(dt)
+            self.round_cpu[-1][kind].append(cpu)
         else:
             self.failed += 1
             if ok is False:  # a wrong answer, not an exception
@@ -124,14 +132,19 @@ class Run:
             if n and time.perf_counter() - t0 >= self.seconds:
                 break
             n += 1
+            self.round_cpu.append(defaultdict(list))
             run_round(r, f"r{n}")
         self.diag["window_s"] = round(time.perf_counter() - t0, 3)
         self.diag["rounds"] = n
         self.cpu_marks["window1"] = tr.tree_cpu_s()
+        self.diag["window_cpu_s"] = round(self.cpu_marks["window1"] - self.cpu_marks["window0"], 3)
         steal1 = tr.host_cpu()
-        self.diag["host_steal_frac"] = round(
-            (steal1[0] - steal0[0]) / max(1, steal1[1] - steal0[1]), 4
-        )
+        total = max(1, steal1[2] - steal0[2])
+        self.diag["host_steal_frac"] = round((steal1[0] - steal0[0]) / total, 4)
+        # busy share of all CPUs, the run's own tree included: a figure well
+        # above window_cpu_s / (window_s * CPUs) means other load in the guest
+        self.diag["host_busy_frac"] = round(
+            1 - (steal1[1] - steal0[1] + steal1[0] - steal0[0]) / total, 4)
         self.timed = False
 
     def setup_s(self, excluded: float) -> float:
@@ -139,11 +152,21 @@ class Run:
         seconds of traced-only work."""
         return self.t_window0 - self.t_session0 - excluded
 
+    def cpu_ms(self, kind: str) -> float:
+        """CPU-milliseconds of the process tree per operation of ``kind``, over
+        the whole window. A mean, not a median: the JVM compiles the code
+        Spark generates for new plans in bursts, and that work is part of
+        what each query costs."""
+        xs = [x for r in self.round_cpu for x in r.get(kind, [])]
+        return 1e3 * sum(xs) / len(xs) if xs else float("nan")
+
     def latency_diag(self, kind: str) -> None:
         xs = self.samples.get(kind, [])
         h = len(xs) // 2
         self.diag[kind] = {
             "n": len(xs),
+            "round_cpu_ms": [round(1e3 * sum(r[kind]) / len(r[kind]), 1)
+                             for r in self.round_cpu if r.get(kind)],
             "p50_ms": round(1e3 * _median(xs), 2),
             "first_half_p50_ms": round(1e3 * _median(xs[:h]), 2) if h else None,
             "second_half_p50_ms": round(1e3 * _median(xs[h:]), 2) if h else None,
@@ -315,20 +338,24 @@ def _dir_bytes(path: str) -> int:
 
 def serve(run: Run) -> dict:
     """Materialized, bucketed Parquet index; routed single queries through
-    ``run_queries_wand`` and batched ``run_queries`` calls. A traced run
-    also merges a chain of deltas into the index after the window."""
+    ``run_queries_wand``, after batched ``run_queries`` calls in set-up. A
+    traced run also merges a chain of deltas into the index after the
+    window."""
     rng = np.random.default_rng([run.seed, 1])
     names = gen.with_markers(gen.vocab_names(rng), MERGES, run.seed)
     base = gen.make_corpus(rng, names, SERVE_TURNS, f"s{run.seed:x}-")
     base_path = os.path.join(run.tmp, "base.parquet")
     gen.write_parquet(base, base_path)
     oracle = Bm25Oracle(base)
-    n_rounds = SERVE_WARMUP_ROUNDS + 1 + math.ceil(run.seconds)  # a round takes over a second
-    per_round = SINGLES_PER_ROUND + BATCHES_PER_ROUND * BATCH_SIZE
-    stream = gen.serve_queries(rng, names, oracle.df, n_rounds * per_round)
-    rounds = [stream[i * per_round:(i + 1) * per_round] for i in range(n_rounds)]
+    n_rounds = SERVE_WARMUP_ROUNDS + 1 + math.ceil(run.seconds / SERVE_MIN_ROUND_S)
+    stream = gen.serve_queries(rng, names, oracle.df, n_rounds * SINGLES_PER_ROUND)
+    rounds = [stream[i * SINGLES_PER_ROUND:(i + 1) * SINGLES_PER_ROUND] for i in range(n_rounds)]
     wants = [[oracle.topk(q, K) for q in rq] for rq in rounds]
-    chain = _delta_chain(run, rng, names, base, "s", rounds[-1][SINGLES_PER_ROUND:])
+    bstream = gen.serve_queries(rng, names, oracle.df, BATCHES * BATCH_SIZE)
+    batches = [dict(enumerate(bstream[j * BATCH_SIZE:(j + 1) * BATCH_SIZE], start=1))
+               for j in range(BATCHES)]
+    batch_wants = [{i: oracle.topk(q, K) for i, q in b.items()} for b in batches]
+    chain = _delta_chain(run, rng, names, base, "s", list(batches[-1].values()))
 
     from bge_m3_onnx_spark.plans.checkpoint import STAGES, load_materialized, materialize_index
     from bge_m3_onnx_spark.plans.query import run_queries
@@ -375,9 +402,7 @@ def serve(run: Run) -> dict:
     run.wrap_df_lookup(idx)
 
     def run_round(ri, tag):
-        queries, want = rounds[ri], wants[ri]
-        for i in range(SINGLES_PER_ROUND):
-            q, w = queries[i], want[i]
+        for i, (q, w) in enumerate(zip(rounds[ri], wants[ri])):
             run.op(
                 "single",
                 lambda q=q, i=i: run.traced_query(
@@ -385,21 +410,23 @@ def serve(run: Run) -> dict:
                     f"{tag}.s{i}", router=True),
                 lambda rows, q=q, w=w: check_topk(_tuples(rows), oracle, q, K, w),
             )
-        for j in range(BATCHES_PER_ROUND):
-            lo = SINGLES_PER_ROUND + j * BATCH_SIZE
-            batch = dict(enumerate(queries[lo:lo + BATCH_SIZE], start=1))
-            bw = dict(enumerate(want[lo:lo + BATCH_SIZE], start=1))
-            run.op(
-                "batch",
-                lambda batch=batch, j=j: run.traced_query(
-                    lambda st: run_queries(spark, idx, batch, k=K), f"{tag}.b{j}"),
-                lambda rows, batch=batch, bw=bw: _check_batch(rows, oracle, batch, bw),
-            )
 
     t0 = time.perf_counter()
     for r in range(SERVE_WARMUP_ROUNDS):
         with tracer.span("warmup", f"w{r}"):
             run_round(r, f"w{r}")
+    # batched calls: checked, and timed for the diagnostics only
+    batch_s = []
+
+    def batch_call(batch, j):
+        tb = time.perf_counter()
+        rows = run.traced_query(lambda st: run_queries(spark, idx, batch, k=K), f"w.b{j}")
+        batch_s.append(time.perf_counter() - tb)
+        return rows
+
+    for j, (batch, bw) in enumerate(zip(batches, batch_wants)):
+        run.op("batch", lambda batch=batch, j=j: batch_call(batch, j),
+               lambda rows, batch=batch, bw=bw: _check_batch(rows, oracle, batch, bw))
     warm_s = time.perf_counter() - t0
     run.window(range(SERVE_WARMUP_ROUNDS, n_rounds), run_round)
     if run.trace:
@@ -416,11 +443,12 @@ def serve(run: Run) -> dict:
     xs = sorted(run.samples["single"])
     if xs:
         run.diag["single"]["p90_ms"] = round(1e3 * xs[min(len(xs) - 1, int(0.9 * len(xs)))], 2)
-    run.diag["batch_ms"] = [round(1e3 * x) for x in run.samples["batch"]]
-    run.diag["batch_queries_per_s"] = round(_rate(BATCH_SIZE, run.samples["batch"]), 2)
+    run.diag["single_ms"] = [round(1e3 * x) for x in run.samples["single"]]
+    run.diag["batch_ms"] = [round(1e3 * x) for x in batch_s]
+    run.diag["batch_queries_per_s"] = round(_rate(BATCH_SIZE, batch_s), 2)
     return {
         "setup_s": (run.setup_s(traced_s), "s"),
-        "query_p50_ms": (1e3 * _median(run.samples["single"]), "ms"),
+        "query_cpu_ms": (run.cpu_ms("single"), "ms"),
         "index_mb": (index_bytes / 1e6, "MB"),
     }
 
@@ -499,7 +527,7 @@ def _run_chain(run: Run, idx, chain: list[dict]) -> None:
 def prune(run: Run) -> dict:
     """Cached index from ``build_index(with_blocks=True)`` over a spiky
     corpus; the pruning shapes through forced WAND and through
-    ``run_queries`` (bit-identical), then ``run_queries`` batches of them."""
+    ``run_queries`` (bit-identical)."""
     rng = np.random.default_rng([run.seed, 2])
     names = gen.vocab_names(rng)
     base = gen.make_corpus(rng, names, PRUNE_TURNS, f"p{run.seed:x}-", spike_frac=SPIKE_FRAC)
@@ -508,8 +536,6 @@ def prune(run: Run) -> dict:
     oracle = Bm25Oracle(base)
     shapes = gen.prune_queries(rng, names, oracle.df)
     wants = [oracle.topk(q, k) for _, k, q in shapes]
-    batch = {i + 1: q for i, (_, _, q) in enumerate(shapes)}
-    batch_wants = {i: oracle.topk(q, K) for i, q in batch.items()}
 
     from bge_m3_onnx_spark.plans.build_index import build_index
     from bge_m3_onnx_spark.plans.query import run_queries
@@ -562,13 +588,6 @@ def prune(run: Run) -> dict:
                     _tuples(rows), oracle, q, k, want)
                 and w is not None and _tuples(w) == _tuples(rows),
             )
-        for j in range(PRUNE_BATCHES):
-            run.op(
-                "batch",
-                lambda j=j: run.traced_query(
-                    lambda st: run_queries(spark, idx, batch, k=K), f"{tag}.b{j}"),
-                lambda rows: _check_batch(rows, oracle, batch, batch_wants),
-            )
 
     t0 = time.perf_counter()
     with tracer.span("warmup", "w0"):
@@ -585,11 +604,12 @@ def prune(run: Run) -> dict:
     run.latency_diag("wand")
     run.latency_diag("exact")
     run.diag["wand"]["by_shape_ms"] = [round(1e3 * x) for x in run.samples["wand"]]
-    run.diag["batch_ms"] = [round(1e3 * x) for x in run.samples["batch"]]
-    run.diag["batch_queries_per_s"] = round(_rate(len(batch), run.samples["batch"]), 2)
+    run.diag["exact"]["by_shape_ms"] = [round(1e3 * x) for x in run.samples["exact"]]
+    run.diag["exact"]["cpu_ms"] = round(run.cpu_ms("exact"), 1)
+    run.diag["wand"]["by_shape_cpu_ms"] = [round(1e3 * x) for r in run.round_cpu for x in r["wand"]]
     return {
         "setup_s": (run.setup_s(traced_s), "s"),
-        "query_p50_ms": (1e3 * _median(run.samples["wand"]), "ms"),
+        "query_cpu_ms": (run.cpu_ms("wand"), "ms"),
         "index_mb": (storage_bytes / 1e6, "MB"),
     }
 
